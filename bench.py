@@ -497,7 +497,10 @@ def main() -> None:
         # Machine state at bench time: high load here explains slow
         # medians (round-3's "regression" was a loaded machine).
         "loadavg_1m": round(os.getloadavg()[0], 2),
-        "cpus": os.cpu_count(),
+        # cpus = the cores the session actually ran on (SPARK_GRAFT_CPUS
+        # may pin fewer than the machine has); nproc = the machine's.
+        "cpus": spark.sparkContext.defaultParallelism,
+        "nproc": os.cpu_count(),
         # Self-declared noise flags (r12 judge directive): a row whose
         # run-to-run spread EXCEEDS its median is machine noise, not a
         # plan signal — drift adjudication should skip these rows

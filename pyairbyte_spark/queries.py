@@ -7701,7 +7701,7 @@ _register_profile_query()
     "store_agg_distributed_events",
     """
     -- r13 distributed metadata tier: a MIXED count/min/max list on a
-    -- checkpoint-sidecar manifest folds footer stats RELATIONALLY —
+    -- checkpoint-sidecar manifest folds footer stats on the executors —
     -- the entry list never reaches the driver (poisoned in-query) and
     -- the unfiltered cluster-key aggregates read zero files. Correct
     -- pushdown is invisible in the numbers: the oracle just aggregates.
@@ -7711,11 +7711,13 @@ _register_profile_query()
            CAST(max(event_id) AS BIGINT) AS max_id
     FROM events WHERE event_id < 4000
     """,
-    "agg_where on a distributed (checkpoint-sidecar) manifest: one "
-    "pandas-UDF pass classifies files into prune/metadata/boundary, "
-    "footer contributions fold relationally, dominance pruning drops "
-    "non-competitive boundaries — the metadata tier survives exactly "
-    "the >=512-entry manifests where it matters at 100 TB",
+    "agg_where on a distributed (checkpoint-sidecar) manifest: the "
+    "same live-file fold as the driver venue runs in one mapInArrow "
+    "pass, classifying files into prune/metadata/boundary and folding "
+    "footer contributions into one partial per partition; the driver "
+    "merges the partials, and dominance pruning drops non-competitive "
+    "boundaries — the metadata tier survives exactly the >=512-entry "
+    "manifests where it matters at 100 TB",
 )
 def store_agg_distributed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
@@ -7804,7 +7806,7 @@ def store_agg_distributed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-file SUM harvest (write-time harvest_sums or build_sum_stats "
     "backfill, a repair_metadata commit) makes sum/avg "
     "metadata-answerable: unfiltered sums read ZERO files (asserted "
-    "in-query, driver AND distributed classifier), range sums read "
+    "in-query, driver AND sidecar venue), range sums read "
     "only boundary files; avg decomposes to exact sum+count totals",
 )
 def store_sum_tier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7844,7 +7846,7 @@ def store_sum_tier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert rb["files_summed"] > 0, rb
     r_bf = b.agg_where("m", aggs)
     assert r_bf["files_scanned"] == 0, r_bf
-    # 3) distributed classifier folds harvested sums relationally —
+    # 3) the sidecar venue folds harvested sums on the executors —
     # the entry list never reaches the driver (poisoned)
     wh = tempfile.mkdtemp(prefix="q-sumd-")
     w = CommitLogTableStore(spark, wh, "q", harvest_sums=True)

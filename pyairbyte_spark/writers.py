@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyairbyte_spark import livefold
 from pyairbyte_spark.constants import AB_EXTRACTED_AT_COLUMN, AB_RAW_ID_COLUMN
 from pyairbyte_spark.strategies import WriteMethod
 
@@ -1029,73 +1030,6 @@ class MultiTableTxn:
         return (
             f"MultiTableTxn({self.group_id!r}, prepared={self.prepared!r})"
         )
-
-
-def _agg_alias(fn: str, col: str) -> str:
-    return f"{fn}_star" if col == "*" else f"{fn}_{col}"
-
-
-def _agg_meta_answer(
-    f: dict,
-    specs: "list[tuple[str, str]]",
-    phys_of: "dict[str, str]",
-    exact_minmax: "set[str]",
-) -> "dict | None":
-    """Stats-tier contributions of a must-match file for EVERY
-    requested aggregate, or None when any is unanswerable from the
-    footer stats: ``count(*)`` from the row count, ``count(col)`` from
-    rows − nulls, ``min/max(col)`` from the zone map when the column's
-    type makes footer min/max exact values, ``sum(col)`` from the
-    store-harvested per-file sum when present. Module-level (not a
-    closure over the store) so both :meth:`agg_where`'s driver loop
-    and the distributed classifier's pandas UDF can ship it to
-    executors."""
-    rows = f.get("rows")
-    if rows is None:
-        return None
-    if rows == 0:
-        return {}
-    stats = f.get("stats") or {}
-    out: dict = {}
-    for fn, col in specs:
-        a = _agg_alias(fn, col)
-        if fn == "count" and col == "*":
-            out[a] = rows
-            continue
-        cs = stats.get(phys_of[col])
-        if fn == "count":
-            nulls = (cs or {}).get("nulls")
-            if nulls is None:
-                return None
-            out[a] = rows - nulls
-            continue
-        if fn == "avg":
-            # agg_where expands avg -> sum + count before classifying;
-            # a direct avg spec has no stats tier
-            return None
-        if fn == "sum":
-            # harvested at staging (harvest_sums / build_sum_stats) —
-            # parquet footers carry no sum, so absence = scan tier
-            if cs is None:
-                return None
-            nulls = cs.get("nulls")
-            if nulls is not None and nulls >= rows:
-                continue  # all-null: SQL SUM ignores it
-            s = cs.get("sum")
-            if s is None:
-                return None
-            out[a] = s
-            continue
-        if col not in exact_minmax or cs is None:
-            return None
-        nulls = cs.get("nulls")
-        if nulls is not None and nulls >= rows:
-            continue  # all-null: contributes no candidate
-        v = cs.get("min" if fn == "min" else "max")
-        if v is None:
-            return None
-        out[a] = v
-    return out
 
 
 class CommitLogTableStore(TableStore):
@@ -3416,15 +3350,14 @@ class CommitLogTableStore(TableStore):
     # distributed path.
     DISTRIBUTED_MANIFEST_MIN_BYTES = 8 << 20
 
-    # In a distributed scan, once at least this many files survive
-    # pruning (an unselective predicate over a huge table), the
-    # surviving PATH LIST itself is the driver bottleneck. Above the
-    # threshold, entries whose live files all survive collapse to
-    # whole-dir groups (no per-file paths cross the driver; bucket
-    # liveness rides as a row filter) and only partially-pruned
-    # entries ship explicit file lists — driver memory O(data dirs +
-    # partially-pruned files). Below it, the exact file-list plan is
-    # kept, byte-identical to the driver path.
+    # Once at least this many files survive pruning (an unselective
+    # predicate over a huge table), the surviving PATH LIST itself is
+    # the driver bottleneck. Above the threshold, entries whose live
+    # files all survive collapse to whole-dir groups (no per-file
+    # paths cross the driver; bucket liveness rides as a row filter)
+    # and only partially-pruned entries ship explicit file lists —
+    # driver memory O(data dirs + partially-pruned files). Below it,
+    # the exact file-list plan is kept, identical in both venues.
     DISTRIBUTED_SURVIVOR_COLLAPSE_MIN = 100_000
 
     def _visible_head_version(self, table_name: str) -> int | None:
@@ -3544,279 +3477,58 @@ class CommitLogTableStore(TableStore):
                 df = df.unionByName(add)
         return df
 
-    def _plan_scan_distributed(
-        self,
-        table_name: str,
-        top: dict,
-        entries_df: DataFrame,
-        preds: list[list[tuple]],
+    def _fold_live(
+        self, op, man: dict | None, entries_df: "DataFrame | None"
     ) -> dict:
-        """Zone-map pruning as a Spark job over the sidecar frame: the
-        liveness rule runs as JVM filters, the (pure-Python) DNF stats
-        check runs as an Arrow-batched pandas UDF over exactly the
-        same ``file_may_match_dnf`` the driver path uses — one
-        semantics, two execution venues. Only surviving paths are
-        collected."""
-        import numpy as np
-        import pandas as pd
+        """Run a :mod:`~pyairbyte_spark.livefold` op over the snapshot's
+        live files and return its merged partial. A materialized
+        manifest folds on the driver; a sidecar frame folds on the
+        executors in one ``mapInArrow`` pass (one partial per
+        partition), so the entry list never reaches the driver."""
+        if entries_df is None:
+            return livefold.fold(op, livefold.manifest_rows(man))
+        parts = entries_df.mapInArrow(
+            livefold.partition_fold(op), "partial binary"
+        ).collect()
+        return livefold.merge_partials(op, (r["partial"] for r in parts))
 
-        from pyairbyte_spark.filestats import file_may_match_dnf
-
-        root = self.table_path(table_name)
-        file_rows = entries_df.filter(F.col("file_path").isNotNull())
-        live = file_rows.filter(
-            F.col("entry_buckets").isNull()
-            | F.col("bucket").isNull()
-            | F.expr("array_contains(entry_buckets, bucket)")
-        )
-        bloom_meta = top.get("bloom_index")
-        bloom_cols = (
-            self._bloom_pred_cols(bloom_meta, preds) if bloom_meta else set()
-        )
-        if preds and bloom_cols:
-            # Bloom bits join onto the sidecar's file rows (left: files
-            # appended after the build have no row and stay unprunable)
-            # and the membership test runs INSIDE the same pandas UDF
-            # as the zone-map DNF — one relational pass, same venue.
-            bpath = self._bloom_index_path(table_name, bloom_meta)
-            bdf = (
-                self.spark.read.parquet(
-                    self.io.spark_read_path(bpath) or bpath
-                )
-                .filter(F.col("col").isin(sorted(bloom_cols)))
-                .groupBy("entry_path", "file_path")
-                .agg(
-                    F.collect_list(
-                        F.struct("col", "m", "k", "bits")
-                    ).alias("__blooms")
-                )
-            )
-            live = live.join(bdf, ["entry_path", "file_path"], "left")
-        else:
-            live = live.withColumn(
-                "__blooms",
-                F.lit(None).cast(
-                    "array<struct<col:string,m:int,k:int,bits:binary>>"
-                ),
-            )
-        if preds:
-            preds_b = preds  # closure-shipped to executors
-
-            @F.pandas_udf("boolean")
-            def _match(
-                stats: pd.Series,
-                rows: pd.Series,
-                sv: pd.Series,
-                blooms: pd.Series,
-            ) -> pd.Series:
-                from pyairbyte_spark.bloom import dnf_may_match
-
-                out = []
-                for s, r, v, b in zip(stats, rows, sv, blooms):
-                    fe = {
-                        "stats": None if s is None else json.loads(s),
-                        "rows": None if pd.isna(r) else int(r),
-                        "sv": None if pd.isna(v) else int(v),
-                    }
-                    ok = bool(file_may_match_dnf(fe, preds_b))
-                    # uncovered files join as null (None or NaN
-                    # depending on the Arrow->pandas conversion):
-                    # conservatively unprunable either way
-                    if ok and isinstance(b, (list, tuple, np.ndarray)) and len(b):
-                        fb = {
-                            d["col"]: (
-                                int(d["m"]),
-                                int(d["k"]),
-                                bytes(d["bits"]),
-                            )
-                            for d in b
-                        }
-                        ok = bool(dnf_may_match(fb, preds_b))
-                    out.append(ok)
-                return pd.Series(out)
-
-            flagged = live.withColumn(
-                "__match",
-                _match(
-                    F.col("stats"),
-                    F.col("rows"),
-                    F.col("sv"),
-                    F.col("__blooms"),
-                ),
-            )
-        else:
-            flagged = live.withColumn("__match", F.lit(True))
-        agg = flagged.agg(
-            F.count(F.lit(1)).alias("t"),
-            F.sum(F.col("__match").cast("long")).alias("s"),
-            F.sum(F.col("__blooms").isNull().cast("long")).alias("u"),
-        ).collect()[0]
-        total = int(agg["t"] or 0)
-        selected = int(agg["s"] or 0)
-        bloom_uncovered = (
-            int(agg["u"] or 0) if (preds and bloom_cols) else None
-        )
-        groups: list[dict] = []
-        if selected >= self.DISTRIBUTED_SURVIVOR_COLLAPSE_MIN:
-            # Unselective regime: the surviving PATH LIST itself would
-            # be the driver bottleneck. Summarize survival per ENTRY
-            # (O(data dirs) rows — entries are commits' data dirs, a
-            # few orders of magnitude fewer than files): an entry whose
-            # live files all survive collapses to a whole-dir group
-            # (no per-file paths cross the driver; bucket liveness
-            # rides as a row filter), and only partially-pruned entries
-            # ship explicit file lists.
-            #
-            # Collapse is legal ONLY for dir-complete entries. A COW
-            # delete/update/optimize shrinks an entry's file list below
-            # its directory's physical contents (superseded files stay
-            # on disk until vacuum); such entries carry ``pruned`` and
-            # MUST keep explicit file lists — a whole-dir read would
-            # resurrect deleted rows and duplicate rewritten ones.
-            hdr_meta = entries_df.filter(
+    def _entry_headers(
+        self, paths, man: dict | None, entries_df: "DataFrame | None"
+    ) -> dict:
+        """Header records (base, schema, pruned flag) of the given
+        entries, by path — what a sidecar file row does not carry."""
+        if not paths:
+            return {}
+        if entries_df is not None:  # only those header rows leave the JVM
+            entries_df = entries_df.filter(
                 F.col("file_path").isNull()
-            ).select(
-                "entry_path",
-                F.coalesce(
-                    F.get_json_object(F.col("extra"), "$.pruned").cast(
-                        "boolean"
-                    ),
-                    F.lit(False),
-                ).alias("__pruned"),
-                # SHALLOW-CLONE entries reference another table's dir
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
+                & F.col("entry_path").isin(sorted(paths))
             )
-            summary = (
-                flagged.groupBy("entry_path")
-                .agg(
-                    F.count(F.lit(1)).alias("n_live"),
-                    F.sum(F.col("__match").cast("long")).alias("n_surv"),
-                    F.first("entry_buckets").alias("entry_buckets"),
+        return self._fold_live(livefold.HeaderOp(set(paths)), man, entries_df)
+
+    def _with_bloom_rows(
+        self, table_name: str, top: dict, entries_df: DataFrame, preds
+    ) -> "DataFrame | None":
+        """The sidecar frame with each file row's bloom bits for the
+        predicate's indexed columns joined on as ``__blooms`` (null for
+        files the index does not cover), or None when the index cannot
+        help this predicate."""
+        meta = top.get("bloom_index")
+        cols = self._bloom_pred_cols(meta, preds) if meta else set()
+        if not (preds and cols):
+            return None
+        path = self._bloom_index_path(table_name, meta)
+        bdf = (
+            self.spark.read.parquet(self.io.spark_read_path(path) or path)
+            .filter(F.col("col").isin(sorted(cols)))
+            .groupBy("entry_path", "file_path")
+            .agg(
+                F.collect_list(F.struct("col", "m", "k", "bits")).alias(
+                    "__blooms"
                 )
-                .join(hdr_meta, "entry_path", "left")
-                .collect()
             )
-            partial = [
-                r["entry_path"]
-                for r in summary
-                if 0 < int(r["n_surv"] or 0)
-                and (int(r["n_surv"]) < int(r["n_live"]) or bool(r["__pruned"]))
-            ]
-            for r in summary:
-                if (
-                    int(r["n_surv"] or 0) == int(r["n_live"]) > 0
-                    and not bool(r["__pruned"])
-                ):
-                    groups.append(
-                        {
-                            "base": os.path.join(
-                                r["__base"] or root, r["entry_path"]
-                            ),
-                            "paths": None,
-                            "live": (
-                                list(r["entry_buckets"])
-                                if r["entry_buckets"] is not None
-                                else None
-                            ),
-                        }
-                    )
-            hdr_base = entries_df.filter(
-                F.col("file_path").isNull()
-            ).select(
-                "entry_path",
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
-            )
-            surv = (
-                flagged.filter(
-                    F.col("__match") & F.col("entry_path").isin(partial)
-                )
-                .join(hdr_base, "entry_path", "left")
-                .select("entry_path", "file_path", "__base")
-                .collect()
-                if partial
-                else []
-            )
-        else:
-            # Selective regime: collect exactly the survivors — the
-            # plan stays byte-identical to the driver path. The base
-            # rides each collected row (clone entries resolve to their
-            # source dir) — still O(survivors) driver rows.
-            hdr_base = entries_df.filter(
-                F.col("file_path").isNull()
-            ).select(
-                "entry_path",
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
-            )
-            surv = (
-                flagged.filter(F.col("__match"))
-                .join(hdr_base, "entry_path", "left")
-                .select("entry_path", "file_path", "__base")
-                .collect()
-            )
-        by_entry: dict[tuple[str, str], list[str]] = {}
-        for r in surv:
-            b = r["__base"] or root
-            by_entry.setdefault((b, r["entry_path"]), []).append(
-                os.path.join(b, r["entry_path"], r["file_path"])
-            )
-        groups.extend(
-            {"base": os.path.join(b, ep), "paths": ps, "live": None}
-            for (b, ep), ps in by_entry.items()
         )
-        # Pre-stats entries (no file list): whole-dir groups with
-        # row-level bucket filtering, exactly as the driver path.
-        hdr = (
-            entries_df.filter(
-                F.col("file_path").isNull() & ~F.col("has_files")
-            )
-            .select(
-                "entry_path",
-                "entry_buckets",
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
-            )
-            .collect()
-        )
-        for r in hdr:
-            groups.append(
-                {
-                    "base": os.path.join(
-                        r["__base"] or root, r["entry_path"]
-                    ),
-                    "paths": None,
-                    "live": (
-                        list(r["entry_buckets"])
-                        if r["entry_buckets"] is not None
-                        else None
-                    ),
-                }
-            )
-        plan = {
-            "files_total": total,
-            "files_selected": selected,
-            "groups": groups,
-            "predicates": preds,
-            "manifest": top,
-            "distributed": True,
-        }
-        if bloom_uncovered is not None:
-            plan["files_bloom_uncovered"] = bloom_uncovered
-        if not groups:
-            # Everything skipped: read_where still needs a schema
-            # source; hand it ONE live file instead of the manifest's
-            # (unmaterialized) entry list.
-            one = (
-                file_rows.select("entry_path", "file_path")
-                .limit(1)
-                .collect()
-            )
-            if not one:
-                raise FileNotFoundError(
-                    f"table {table_name!r} snapshot is empty"
-                )
-            plan["schema_path"] = os.path.join(
-                root, one[0]["entry_path"], one[0]["file_path"]
-            )
-        return plan
+        return entries_df.join(bdf, ["entry_path", "file_path"], "left")
 
     def plan_scan(
         self,
@@ -3825,121 +3537,136 @@ class CommitLogTableStore(TableStore):
         *,
         version: int | None = None,
     ) -> dict:
-        """Driver-side data skipping: resolve the snapshot's live files
-        and drop every file whose footer stats prove no row can match
-        ``predicates`` (zone maps; see ``filestats.py``). Returns
+        """Data skipping: resolve the snapshot's live files and drop
+        every file whose footer stats (zone maps; see ``filestats.py``)
+        or bloom bits prove no row can match ``predicates``. Returns
         ``{"files_total", "files_selected", "groups"}`` where
         ``files_total`` counts the snapshot's LIVE files — the
         total/selected gap is exactly the I/O data skipping saved.
 
-        Pure manifest arithmetic for small snapshots: no filesystem
-        listing, no Spark job. When the snapshot's checkpoint sidecar
-        exceeds :attr:`DISTRIBUTED_MANIFEST_MIN_BYTES`, the entry list
-        is NOT materialized on the driver at all — the sidecar (one
-        parquet row per data file) is read as a Spark DataFrame, the
-        delta chain and zone-map DNF are applied relationally, and
-        only the SURVIVING file paths cross back to the driver
-        (Delta's distributed checkpoint-scan pattern). Driver memory
-        stays O(matching files), flat in table size.
+        One :class:`~pyairbyte_spark.livefold.ScanOp` fold decides
+        every file. For small snapshots it runs over the cached
+        manifest on the driver: no filesystem listing, no Spark job.
+        When the snapshot's checkpoint sidecar exceeds
+        :attr:`DISTRIBUTED_MANIFEST_MIN_BYTES`, the same fold runs on
+        the executors over the sidecar frame (delta chain applied
+        relationally, bloom bits joined on) and only the SURVIVING
+        file paths cross back (Delta's distributed checkpoint-scan
+        pattern): driver memory stays O(matching files), flat in table
+        size. Once :attr:`DISTRIBUTED_SURVIVOR_COLLAPSE_MIN` files
+        survive, entries whose live files all survive become whole-dir
+        groups instead of path lists.
 
         At 100 TB a selective predicate launches the scan over the
         matching sliver of files instead of the table.
         """
-        from pyairbyte_spark.filestats import file_may_match_dnf, normalize_dnf
+        from pyairbyte_spark.filestats import normalize_dnf
 
         preds = normalize_dnf(predicates)
         top, entries_df, man = self._scan_source(table_name, version)
         # stats are keyed by PHYSICAL column names; callers predicate
         # on the logical view.
         preds = self._physical_dnf(top, preds)
-        if entries_df is not None:
-            return self._plan_scan_distributed(
-                table_name, top, entries_df, preds
-            )
-        blooms = self._bloom_lookup(table_name, man, preds)
+        blooms = frame = None
+        if entries_df is None:
+            blooms = self._bloom_lookup(table_name, man, preds)
+        else:
+            frame = self._with_bloom_rows(table_name, top, entries_df, preds)
         oversize = blooms is self._BLOOM_OVERSIZE
-        groups: list[dict] = []
-        total = selected = uncovered = 0
-        cand_keys: list[tuple[str, str]] = []
-        for e in man.get("entries") or []:
-            base = os.path.join(self._entry_base(table_name, e), e["path"])
-            live = e.get("buckets")
-            files = e.get("files")
-            if files is None:
-                # Pre-stats manifest: read the whole dir, row-filter
-                # dead buckets (correct, just unskippable).
-                groups.append({"base": base, "paths": None, "live": live})
-                continue
-            keep: list[str] = []
-            keep_keys: list[tuple[str, str]] = []
-            for f in files:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
-                    continue  # superseded bucket data — never live
-                total += 1
-                if (
-                    isinstance(blooms, dict)
-                    and (e["path"], f["path"]) not in blooms
-                ):
-                    uncovered += 1  # coverage watermark (live files)
-                if not file_may_match_dnf(f, preds):
-                    continue
-                if isinstance(blooms, dict):
-                    from pyairbyte_spark.bloom import dnf_may_match
 
-                    fb = blooms.get((e["path"], f["path"]))
-                    # Files without bloom rows (post-build appends)
-                    # are conservatively kept.
-                    if fb and not dnf_may_match(fb, preds):
-                        continue
-                elif oversize:
-                    # Defer to the relational probe below; remember
-                    # the key alongside its path for post-filtering.
-                    cand_keys.append((e["path"], f["path"]))
-                    keep_keys.append((e["path"], f["path"]))
-                keep.append(os.path.join(base, f["path"]))
-                selected += 1
-            if keep:
-                g: dict = {"base": base, "paths": keep, "live": live}
-                if oversize:
-                    g["__keys"] = keep_keys
-                groups.append(g)
-        if oversize and cand_keys:
-            probe = self._bloom_probe_keys(
-                table_name, man["bloom_index"], preds, cand_keys
+        def scan(**kw) -> dict:
+            op = livefold.ScanOp(
+                preds,
+                blooms=blooms if isinstance(blooms, dict) else None,
+                bloom_rows=frame is not None,
+                **kw,
             )
-            if probe is None:  # index unreadable: keep everything
-                for g in groups:
-                    g.pop("__keys", None)
-            else:
-                keep_set, uncovered = probe
-                pruned: list[dict] = []
-                selected = 0
-                for g in groups:
-                    ks = g.pop("__keys", None)
-                    if ks is None:
-                        pruned.append(g)
-                        continue
-                    paths = [
-                        p for p, k in zip(g["paths"], ks) if k in keep_set
-                    ]
-                    selected += len(paths)
-                    if paths:
-                        pruned.append({**g, "paths": paths})
-                groups = pruned
-        out = {
-            "files_total": total,
+            return self._fold_live(
+                op, man, entries_df if frame is None else frame
+            )
+
+        acc = scan(cap=self.DISTRIBUTED_SURVIVOR_COLLAPSE_MIN - 1)
+        kept, selected = acc["kept"], acc["selected"]
+        uncovered = acc["uncovered"]
+        headers: dict = {}
+        if selected >= self.DISTRIBUTED_SURVIVOR_COLLAPSE_MIN:
+            # Unselective regime: the surviving PATH LIST itself would
+            # be the driver bottleneck. Count survival per ENTRY
+            # (O(data dirs)): an entry whose live files all survive
+            # becomes a whole-dir group (bucket liveness rides as a row
+            # filter) and only partially-pruned entries list files.
+            # Collapse is legal ONLY for dir-complete entries: a COW
+            # delete/update/optimize shrinks an entry's file list below
+            # its directory's contents (superseded files stay until
+            # vacuum) and marks it ``pruned`` — a whole-dir read would
+            # resurrect deleted rows and duplicate rewritten ones.
+            summary = scan(cap=-1, per_entry=True)
+            kept, partial = summary["kept"], set()
+            for p, (n_live, n_surv, hdr) in summary["entries"].items():
+                headers[p] = hdr
+                if n_surv and (n_surv < n_live or hdr["pruned"]):
+                    partial.add(p)
+                elif n_surv:
+                    kept[p] = [hdr["buckets"], None]
+            if partial:
+                kept.update(scan(only=partial)["kept"])
+        elif oversize and selected:
+            # An index too large for the driver cache: probe the
+            # surviving keys relationally, nothing index-sized collected.
+            keys = [
+                (p, fp) for p, (_b, fps) in kept.items() for fp in fps or ()
+            ]
+            probe = self._bloom_probe_keys(
+                table_name, man["bloom_index"], preds, keys
+            )
+            if probe is not None:  # None: index unreadable, keep all
+                keep, uncovered = probe
+                kept = {
+                    p: [b, fps and [fp for fp in fps if (p, fp) in keep]]
+                    for p, (b, fps) in kept.items()
+                }
+                kept = {p: v for p, v in kept.items() if v[1] != []}
+                selected = sum(len(v[1] or ()) for v in kept.values())
+        headers.update(
+            self._entry_headers(
+                [p for p in kept if p not in headers], man, entries_df
+            )
+        )
+        groups: list[dict] = []
+        for p, (live, fps) in kept.items():
+            base = os.path.join(self._entry_base(table_name, headers[p]), p)
+            groups.append(
+                {
+                    "base": base,
+                    "paths": fps and [os.path.join(base, fp) for fp in fps],
+                    "live": live,
+                }
+            )
+        plan = {
+            "files_total": acc["total"],
             "files_selected": selected,
             "groups": groups,
             "predicates": preds,
-            "manifest": man,
+            "manifest": top,
         }
-        if blooms is not None:
-            out["files_bloom_uncovered"] = uncovered
-        return out
+        if blooms is not None or frame is not None:
+            plan["files_bloom_uncovered"] = uncovered
+        if entries_df is not None:
+            plan["distributed"] = True
+            if not groups:
+                # Everything skipped: read_where still needs a schema
+                # source; hand it ONE live file instead of the
+                # manifest's (unmaterialized) entry list.
+                if acc["first"] is None:
+                    raise FileNotFoundError(
+                        f"table {table_name!r} snapshot is empty"
+                    )
+                p, fp = acc["first"]
+                hdr = self._entry_headers([p], man, entries_df)[p]
+                plan["schema_path"] = os.path.join(
+                    self._entry_base(table_name, hdr), p, fp
+                )
+        return plan
 
     def read_where(
         self,
@@ -4030,16 +3757,13 @@ class CommitLogTableStore(TableStore):
         "files_metadata", "files_scanned"}`` — total minus the other
         two is the zone-map-pruned tier. Merge-on-read deletes poison
         footer counts, so DV-bearing snapshots scan every surviving
-        file (still may-match pruned; exact either way)."""
-        from pyairbyte_spark.filestats import (
-            dnf_to_column,
-            file_may_match_dnf,
-            file_must_match_dnf,
-            normalize_dnf,
-        )
+        file (still may-match pruned; exact either way). This is
+        :meth:`agg_where` for ``count(*)``: the same fold, in either
+        venue, degrading to one pruned scan past
+        ``COUNT_SCAN_FALLBACK_MAX`` boundary files."""
+        from pyairbyte_spark.filestats import normalize_dnf
 
-        preds = normalize_dnf(predicates)
-        if not preds:
+        if not normalize_dnf(predicates):
             # Unfiltered: table_stats already answers from the manifest
             # (DV row counts correct MoR deletes exactly) — zero files.
             ts = self.table_stats(table_name, version=version)
@@ -4050,185 +3774,48 @@ class CommitLogTableStore(TableStore):
                     "files_metadata": ts.get("files"),
                     "files_scanned": 0,
                 }
-        top, entries_df, man = self._scan_source(table_name, version)
-        preds_phys = self._physical_dnf(top, preds)
-        has_dvs = bool((top or {}).get("delete_vectors"))
-        if entries_df is not None:
-            return self._count_where_distributed(
-                table_name, top, entries_df, preds, preds_phys, has_dvs
-            )
-        meta_rows = 0
-        meta_files = 0
-        total = 0
-        scan_entries: list[dict] = []
-        exact_total = True
-        for e in man.get("entries") or []:
-            live = e.get("buckets")
-            files = e.get("files")
-            if files is None:
-                # Pre-stats entry: the dir itself is the authority.
-                scan_entries.append(e)
-                exact_total = False
-                continue
-            keep: list[dict] = []
-            for f in files:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
-                    continue
-                total += 1
-                if not file_may_match_dnf(f, preds_phys):
-                    continue
-                if not has_dvs and file_must_match_dnf(f, preds_phys):
-                    meta_rows += f["rows"] or 0
-                    meta_files += 1
-                else:
-                    keep.append(f)
-            if keep:
-                scan_entries.append({**e, "files": keep})
-        n_scan = sum(
-            len(e["files"]) if e.get("files") is not None else 0
-            for e in scan_entries
+        r = self.agg_where(
+            table_name, [("count", "*")], predicates, version=version
         )
-        scanned_rows = 0
-        if scan_entries:
-            df = self._apply_mapping(
-                self._entries_df(table_name, scan_entries, dv_man=man), man
-            )
-            residual = dnf_to_column(preds)  # logical names post-mapping
-            if residual is not None:
-                df = df.filter(residual)
-            scanned_rows = df.count()
         return {
-            "count": meta_rows + scanned_rows,
-            "files_total": total if exact_total else None,
-            "files_metadata": meta_files,
-            "files_scanned": n_scan if exact_total else None,
+            "count": r["aggs"]["count_star"],
+            **{
+                k: r[k]
+                for k in ("files_total", "files_metadata", "files_scanned")
+            },
         }
 
-    def _count_where_distributed(
+    def _boundary_df(
         self,
         table_name: str,
         top: dict,
-        entries_df: DataFrame,
-        preds: list[list[tuple]],
-        preds_phys: list[list[tuple]],
-        has_dvs: bool,
-    ) -> dict:
-        """:meth:`count_where` over the checkpoint sidecar: the
-        three-tier classification runs as one Spark aggregation (the
-        same pandas-UDF venue as :meth:`_plan_scan_distributed`), the
-        metadata tier sums ``rows`` relationally, and only BOUNDARY
-        file paths cross to the driver — at most
-        ``COUNT_SCAN_FALLBACK_MAX`` of them, past which the count
-        degrades to one ordinary pruned scan (:meth:`read_where`)."""
-        import pandas as pd
-
-        from pyairbyte_spark.filestats import (
-            file_may_match_dnf,
-            file_must_match_dnf,
-        )
-
-        # MoR DVs poison footer counts, and pre-stats dir entries have
-        # no file rows to classify: both degrade to one pruned scan.
-        if has_dvs or not entries_df.filter(
-            F.col("file_path").isNull() & ~F.col("has_files")
-        ).isEmpty():
-            df = self.read_where(table_name, preds)
-            return {
-                "count": df.count(),
-                "files_total": None,
-                "files_metadata": 0,
-                "files_scanned": None,
-            }
-
-        preds_b = preds_phys
-
-        @F.pandas_udf("string")
-        def _tier(stats: pd.Series, rows: pd.Series, sv: pd.Series) -> pd.Series:
-            out = []
-            for s, r, v in zip(stats, rows, sv):
-                fe = {
-                    "stats": None if s is None else json.loads(s),
-                    "rows": None if pd.isna(r) else int(r),
-                    "sv": None if pd.isna(v) else int(v),
-                }
-                if not file_may_match_dnf(fe, preds_b):
-                    out.append("prune")
-                elif file_must_match_dnf(fe, preds_b):
-                    out.append("meta")
-                else:
-                    out.append("scan")
-            return pd.Series(out)
-
-        live = entries_df.filter(F.col("file_path").isNotNull()).filter(
-            F.col("entry_buckets").isNull()
-            | F.col("bucket").isNull()
-            | F.expr("array_contains(entry_buckets, bucket)")
-        )
-        flagged = live.withColumn(
-            "__tier", _tier(F.col("stats"), F.col("rows"), F.col("sv"))
-        )
-        agg = flagged.agg(
-            F.count(F.lit(1)).alias("t"),
-            F.sum(
-                F.when(F.col("__tier") == "meta", F.col("rows")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("meta_rows"),
-            F.sum((F.col("__tier") == "meta").cast("long")).alias("mf"),
-            F.sum((F.col("__tier") == "scan").cast("long")).alias("sf"),
-        ).collect()[0]
-        n_scan = int(agg["sf"] or 0)
-        if n_scan > self.COUNT_SCAN_FALLBACK_MAX:
-            # Unselective predicate: the boundary path list would be
-            # the driver bottleneck — one pruned scan IS the plan.
-            df = self.read_where(table_name, preds)
-            return {
-                "count": df.count(),
-                "files_total": int(agg["t"] or 0),
-                "files_metadata": 0,
-                "files_scanned": n_scan,
-            }
+        man: dict | None,
+        entries_df: "DataFrame | None",
+        scan: dict,
+        preds,
+    ) -> "DataFrame | None":
+        """The rows matching ``preds`` (logical names) in the boundary
+        files and pre-stats entries of an
+        :class:`~pyairbyte_spark.livefold.AggOp` fold's ``scan`` map,
+        or None when there are none."""
         from pyairbyte_spark.filestats import dnf_to_column
 
-        scanned_rows = 0
-        if n_scan:
-            hdr_meta = entries_df.filter(F.col("file_path").isNull()).select(
-                "entry_path",
-                # SHALLOW-CLONE entries reference another table's dir
-                F.get_json_object(F.col("extra"), "$.base").alias("__base"),
-            )
-            rows = (
-                flagged.filter(F.col("__tier") == "scan")
-                .select("entry_path", "file_path")
-                .join(hdr_meta, "entry_path", "left")
-                .collect()
-            )
-            root = self.table_path(table_name)
-            paths = [
-                os.path.join(
-                    r["__base"] or root, r["entry_path"], r["file_path"]
-                )
-                for r in rows
-            ]
-            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            df = self._fill_added(df, top)
-            residual = dnf_to_column(preds_phys)
-            if residual is not None:
-                df = df.filter(residual)
-            scanned_rows = df.count()
-        return {
-            "count": int(agg["meta_rows"] or 0) + scanned_rows,
-            "files_total": int(agg["t"] or 0),
-            "files_metadata": int(agg["mf"] or 0),
-            "files_scanned": n_scan,
-        }
+        if not scan:
+            return None
+        hdrs = self._entry_headers(list(scan), man, entries_df)
+        entries = [
+            {**hdrs[p], "buckets": b, "files": fs}
+            for p, (b, fs) in scan.items()
+        ]
+        df = self._apply_mapping(
+            self._entries_df(table_name, entries, dv_man=top), top
+        )
+        residual = dnf_to_column(preds)
+        return df if residual is None else df.filter(residual)
 
-    # Boundary-path cap for the distributed count: past this, collect
-    # degrades to one ordinary pruned scan (same plan read_where runs).
+    # Boundary-file cap for count_where / agg_where: past this, the
+    # plan degrades to one ordinary pruned scan (same plan read_where
+    # runs) instead of collecting the boundary list.
     COUNT_SCAN_FALLBACK_MAX = 65_536
 
     # Spark types whose parquet footer min/max are EXACT values in the
@@ -4238,288 +3825,6 @@ class CommitLogTableStore(TableStore):
     _EXACT_STAT_TYPES = (
         "tinyint", "smallint", "int", "bigint", "float", "double",
     )
-
-    def _agg_where_distributed(
-        self,
-        table_name: str,
-        top: dict,
-        entries_df: DataFrame,
-        preds: list[list[tuple]],
-        preds_phys: list[list[tuple]],
-        specs: "list[tuple[str, str]]",
-    ) -> "dict | None":
-        """:meth:`agg_where` over the checkpoint sidecar for MIXED
-        count/min/max lists: one pandas-UDF pass classifies every file
-        row into prune / metadata / boundary (the same three tiers as
-        the driver loop, same :func:`_agg_meta_answer` semantics), the
-        metadata tier's footer contributions FOLD RELATIONALLY (counts
-        sum, min/max fold typed from the contribution JSON), dominance
-        pruning drops boundary files whose zone maps cannot beat the
-        folded candidates, and only the surviving boundary paths cross
-        to the driver (capped at ``COUNT_SCAN_FALLBACK_MAX``, past
-        which one ordinary pruned scan IS the plan). The entry list
-        never materializes on the driver. Returns None when the
-        snapshot cannot be classified (pre-stats dir entries, no
-        recorded schema) — the caller degrades to one pruned scan."""
-        import pandas as pd
-
-        from pyairbyte_spark.filestats import (
-            dnf_to_column,
-            file_may_match_dnf,
-            file_must_match_dnf,
-        )
-
-        # Pre-stats dir entries have no per-file rows to classify, and
-        # without the recorded schema min/max exactness is unknowable.
-        if not entries_df.filter(
-            F.col("file_path").isNull() & ~F.col("has_files")
-        ).isEmpty():
-            return None
-        sch = top.get("schema")
-        if not sch:
-            return None
-        # contributions round-trip through JSON keyed by alias; a
-        # column name that isn't a plain word would break the
-        # get_json_object path ($.count_a.b traverses!) and silently
-        # undercount — degrade those to the pruned scan instead
-        if any(
-            not re.fullmatch(r"\w+", col)
-            for _fn, col in specs
-            if col != "*"
-        ):
-            return None
-        mapping, _dropped = self._mapping_of(top)
-        # schema JSON spells primitives differently from simpleString()
-        # (the _EXACT_STAT_TYPES domain): long/integer/short/byte vs
-        # bigint/int/smallint/tinyint
-        _json_t = {
-            "long": "bigint",
-            "integer": "int",
-            "short": "smallint",
-            "byte": "tinyint",
-        }
-        logical_types: dict[str, str] = {}
-        for fld in json.loads(sch)["fields"]:
-            t = fld.get("type")
-            if isinstance(t, str):
-                logical_types[mapping.get(fld["name"], fld["name"])] = (
-                    _json_t.get(t, t)
-                )
-        phys_of = {
-            col: self._to_physical(top, col)
-            for _fn, col in specs
-            if col != "*"
-        }
-        exact_minmax = {
-            col
-            for col in phys_of
-            if logical_types.get(col) in self._EXACT_STAT_TYPES
-        }
-
-        def _sql_type(col: str) -> str:
-            return (
-                "double"
-                if logical_types.get(col) in ("float", "double")
-                else "long"
-            )
-
-        specs_b = list(specs)
-        preds_b = preds_phys
-        phys_b = dict(phys_of)
-        exact_b = set(exact_minmax)
-
-        @F.pandas_udf("string")
-        def _cls(stats: pd.Series, rows: pd.Series, sv: pd.Series) -> pd.Series:
-            out = []
-            for s, r, v in zip(stats, rows, sv):
-                fe = {
-                    "stats": None if s is None else json.loads(s),
-                    "rows": None if pd.isna(r) else int(r),
-                    "sv": None if pd.isna(v) else int(v),
-                }
-                if not file_may_match_dnf(fe, preds_b):
-                    out.append("P")
-                    continue
-                if not file_must_match_dnf(fe, preds_b):
-                    out.append("S")
-                    continue
-                contrib = _agg_meta_answer(fe, specs_b, phys_b, exact_b)
-                out.append("S" if contrib is None else json.dumps(contrib))
-            return pd.Series(out)
-
-        live = entries_df.filter(F.col("file_path").isNotNull()).filter(
-            F.col("entry_buckets").isNull()
-            | F.col("bucket").isNull()
-            | F.expr("array_contains(entry_buckets, bucket)")
-        )
-        flagged = live.withColumn(
-            "__c", _cls(F.col("stats"), F.col("rows"), F.col("sv"))
-        )
-        is_meta = ~F.col("__c").isin("P", "S")
-        agg_exprs = [
-            F.count(F.lit(1)).alias("__t"),
-            F.sum((F.col("__c") == "S").cast("long")).alias("__sf"),
-            F.sum(is_meta.cast("long")).alias("__mf"),
-        ]
-        for fn, col in specs:
-            a = _agg_alias(fn, col)
-            j = F.get_json_object(F.col("__c"), f"$.{a}")
-            if fn == "count":
-                agg_exprs.append(
-                    F.sum(
-                        F.when(
-                            is_meta,
-                            F.coalesce(j.cast("long"), F.lit(0)),
-                        ).otherwise(F.lit(0))
-                    ).alias(a)
-                )
-            elif fn == "sum":
-                # harvested per-file sums are integral-exact; an
-                # absent key (all-null file contributes nothing) is a
-                # NULL the fold skips — so a no-contribution window
-                # folds to NULL, matching SQL SUM semantics
-                agg_exprs.append(
-                    F.sum(F.when(is_meta, j.cast("long"))).alias(a)
-                )
-            else:
-                fold = F.min if fn == "min" else F.max
-                agg_exprs.append(
-                    fold(
-                        F.when(is_meta, j.cast(_sql_type(col)))
-                    ).alias(a)
-                )
-        row = flagged.agg(*agg_exprs).collect()[0]
-        n_scan = int(row["__sf"] or 0)
-        if n_scan > self.COUNT_SCAN_FALLBACK_MAX:
-            # Unselective predicate: the boundary path list would be
-            # the driver bottleneck — one pruned scan IS the plan
-            # (it re-reads the metadata-tier files too, so the
-            # scanned aggregate alone is the complete answer).
-            df = self.read_where(table_name, preds)
-            exprs = []
-            for fn, col in specs:
-                a = _agg_alias(fn, col)
-                if fn == "count":
-                    e = (
-                        F.count(F.lit(1))
-                        if col == "*"
-                        else F.count(F.col(col))
-                    )
-                    exprs.append(e.cast("long").alias(a))
-                else:
-                    exprs.append(getattr(F, fn)(F.col(col)).alias(a))
-            r = df.agg(*exprs).collect()[0]
-            return {
-                "aggs": {
-                    _agg_alias(fn, col): r[_agg_alias(fn, col)]
-                    for fn, col in specs
-                },
-                "files_total": int(row["__t"] or 0),
-                "files_metadata": 0,
-                "files_scanned": n_scan,
-            }
-        scan_rows = flagged.filter(F.col("__c") == "S")
-        if all(fn in ("min", "max") for fn, _c in specs):
-            # Dominance pruning, relationally: a boundary file whose
-            # zone maps prove it cannot beat ANY folded candidate is
-            # never read (stats.min is a lower bound even when
-            # truncated, so stats.min >= cand proves "cannot lower
-            # the min"; dually for max).
-            conds = []
-            for fn, col in specs:
-                cand = row[_agg_alias(fn, col)]
-                if cand is None:
-                    conds = None
-                    break
-                sv = F.get_json_object(
-                    F.col("stats"),
-                    f"$.{phys_of[col]}.{'min' if fn == 'min' else 'max'}",
-                ).cast(_sql_type(col))
-                conds.append(
-                    sv.isNotNull()
-                    & (sv >= F.lit(cand) if fn == "min" else sv <= F.lit(cand))
-                )
-            if conds:
-                dominated = conds[0]
-                for c in conds[1:]:
-                    dominated = dominated & c
-                scan_rows = scan_rows.filter(~dominated)
-        scanned: dict = {}
-        n_scanned_files = 0
-        rows_: list = []
-        # Zero boundary files (every live file answered from metadata
-        # or pruned — the common zero-read case this tier exists for):
-        # scan_rows is empty by construction, so skip its collect
-        # outright instead of paying a scheduler round-trip to learn
-        # that (one job per metadata-answered agg_where).
-        if n_scan > 0:
-            hdr_meta = entries_df.filter(
-                F.col("file_path").isNull()
-            ).select(
-                "entry_path",
-                # SHALLOW-CLONE entries reference another table's dir
-                F.get_json_object(F.col("extra"), "$.base").alias(
-                    "__base"
-                ),
-            )
-            rows_ = (
-                scan_rows.select("entry_path", "file_path")
-                .join(hdr_meta, "entry_path", "left")
-                .collect()
-            )
-        if rows_:
-            root = self.table_path(table_name)
-            paths = [
-                os.path.join(
-                    r["__base"] or root, r["entry_path"], r["file_path"]
-                )
-                for r in rows_
-            ]
-            n_scanned_files = len(paths)
-            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            df = self._fill_added(df, top)
-            residual = dnf_to_column(preds_phys)
-            if residual is not None:
-                df = df.filter(residual)
-            exprs = []
-            for fn, col in specs:
-                a = _agg_alias(fn, col)
-                if fn == "count":
-                    e = (
-                        F.count(F.lit(1))
-                        if col == "*"
-                        else F.count(F.col(phys_of.get(col, col)))
-                    )
-                    exprs.append(e.cast("long").alias(a))
-                else:
-                    exprs.append(
-                        getattr(F, fn)(F.col(phys_of[col])).alias(a)
-                    )
-            srow = df.agg(*exprs).collect()[0]
-            scanned = {a: srow[a] for a in srow.asDict()}
-        out_aggs: dict = {}
-        for fn, col in specs:
-            a = _agg_alias(fn, col)
-            if fn == "count":
-                out_aggs[a] = int(row[a] or 0) + int(scanned.get(a) or 0)
-            else:
-                vals = [
-                    v
-                    for v in (row[a], scanned.get(a))
-                    if v is not None
-                ]
-                if not vals:
-                    out_aggs[a] = None
-                elif fn == "sum":
-                    out_aggs[a] = sum(vals)
-                else:
-                    out_aggs[a] = min(vals) if fn == "min" else max(vals)
-        return {
-            "aggs": out_aggs,
-            "files_total": int(row["__t"] or 0),
-            "files_metadata": int(row["__mf"] or 0),
-            "files_scanned": n_scanned_files,
-        }
 
     def agg_where(
         self,
@@ -4568,23 +3873,20 @@ class CommitLogTableStore(TableStore):
         range predicate is answered from boundary files only; the
         unfiltered count stays pure manifest arithmetic. Merge-on-read
         DVs poison footer stats, so DV-bearing snapshots scan (still
-        may-match pruned; exact either way). Checkpoint-sidecar
-        (distributed-manifest) snapshots ride the distributed
-        classifier for any count/min/max/sum list — the entry list
-        never materializes on the driver
-        (:meth:`_agg_where_distributed`).
+        may-match pruned; exact either way). The tiers come from one
+        :class:`~pyairbyte_spark.livefold.AggOp` fold, on the driver
+        for cached manifests and on the executors for checkpoint
+        sidecars (the entry list never materializes on the driver);
+        past ``COUNT_SCAN_FALLBACK_MAX`` boundary files the plan
+        degrades to one pruned scan.
         Returns ``{"aggs": {alias: value}, "files_total",
         "files_metadata", "files_scanned"}`` with aliases
         ``{fn}_{col}`` (``count_star`` for ``count(*)``); empty match
         sets yield SQL semantics (count 0, sum/min/max None).
         """
-        from pyairbyte_spark.filestats import (
-            dnf_to_column,
-            file_may_match_dnf,
-            file_must_match_dnf,
-            normalize_dnf,
-        )
+        from pyairbyte_spark.filestats import normalize_dnf
 
+        _alias = livefold.agg_alias
         specs: list[tuple[str, str]] = []
         for fn, col in aggs:
             fn = fn.lower()
@@ -4599,9 +3901,8 @@ class CommitLogTableStore(TableStore):
         if not specs:
             raise ValueError("agg_where requires at least one aggregate")
         if any(fn == "avg" for fn, _c in specs):
-            # AVG = SUM / COUNT(col), decomposed so both the driver
-            # loop and the distributed classifier only ever fold
-            # mergeable aggregates (a per-file average is not
+            # AVG = SUM / COUNT(col), decomposed so the fold only ever
+            # merges mergeable aggregates (a per-file average is not
             # mergeable; a per-file sum+count pair is). The division
             # happens once, here, on the exact integer totals.
             internal: list[tuple[str, str]] = []
@@ -4619,7 +3920,7 @@ class CommitLogTableStore(TableStore):
             ia = r["aggs"]
             out: dict = {}
             for fn, col in specs:
-                a = _agg_alias(fn, col)
+                a = _alias(fn, col)
                 if fn == "avg":
                     s = ia.get(f"sum_{col}")
                     c = ia.get(f"count_{col}")
@@ -4629,10 +3930,6 @@ class CommitLogTableStore(TableStore):
             return {**r, "aggs": out}
         preds = normalize_dnf(predicates)
         top, entries_df, man = self._scan_source(table_name, version)
-        preds_phys = self._physical_dnf(top, preds)
-        has_dvs = bool((top or {}).get("delete_vectors"))
-
-        _alias = _agg_alias
 
         def _agg_exprs():
             out = []
@@ -4649,54 +3946,6 @@ class CommitLogTableStore(TableStore):
                     out.append(getattr(F, fn)(F.col(col)).alias(a))
             return out
 
-        def _scan_fallback(files_total=None, files_scanned=None) -> dict:
-            df = self.read_where(table_name, preds, version=version)
-            row = df.agg(*_agg_exprs()).collect()[0]
-            return {
-                "aggs": {_alias(f, c): row[_alias(f, c)] for f, c in specs},
-                "files_total": files_total,
-                "files_metadata": 0,
-                "files_scanned": files_scanned,
-            }
-
-        if entries_df is not None or has_dvs:
-            if (
-                entries_df is not None
-                and not has_dvs
-                and all(fn == "count" and col == "*" for fn, col in specs)
-            ):
-                # checkpoint-sidecar manifest, pure count(*): the
-                # distributed three-tier classifier already answers it
-                # without materializing the entry list on the driver
-                r = self.count_where(table_name, predicates, version=version)
-                return {
-                    "aggs": {
-                        _alias(fn, col): r["count"] for fn, col in specs
-                    },
-                    "files_total": r.get("files_total"),
-                    "files_metadata": r.get("files_metadata"),
-                    "files_scanned": r.get("files_scanned"),
-                }
-            if (
-                entries_df is not None
-                and not has_dvs
-                and all(
-                    fn in ("count", "min", "max", "sum")
-                    for fn, _c in specs
-                )
-            ):
-                # checkpoint-sidecar manifest, MIXED stats-answerable
-                # list (r13, was a pruned-scan degrade): the same
-                # distributed classifier, extended to fold min/max/
-                # count(col) footer contributions relationally — the
-                # metadata tier holds on exactly the ≥512-entry
-                # manifests where it matters most at 100× scale.
-                r = self._agg_where_distributed(
-                    table_name, top, entries_df, preds, preds_phys, specs
-                )
-                if r is not None:
-                    return r
-            return _scan_fallback()
         # Which columns allow exact metadata min/max, keyed by their
         # PHYSICAL stats name. Types come from the RECORDED schema
         # JSON (entry-level newest first, then the carried top-level
@@ -4705,14 +3954,14 @@ class CommitLogTableStore(TableStore):
         sch = next(
             (
                 e.get("schema")
-                for e in reversed(man.get("entries") or [])
+                for e in reversed((man or {}).get("entries") or [])
                 if e.get("schema")
             ),
             None,
-        ) or man.get("schema")
+        ) or top.get("schema")
         logical_types: dict[str, str] = {}
         if sch:
-            mapping, _dropped = self._mapping_of(man)
+            mapping, _dropped = self._mapping_of(top)
             _json_t = {
                 "long": "bigint",
                 "integer": "int",
@@ -4725,11 +3974,13 @@ class CommitLogTableStore(TableStore):
                     logical_types[mapping.get(fld["name"], fld["name"])] = (
                         _json_t.get(t, t)
                     )
-            for phys, spec in (man.get("added_columns") or {}).items():
+            for phys, spec in (top.get("added_columns") or {}).items():
                 logical_types.setdefault(
                     mapping.get(phys, phys), spec["type"]
                 )
-        else:  # pre-schema manifest: fall back to the scan's own view
+        elif man is not None and any(fn in ("min", "max") for fn, _ in specs):
+            # pre-schema manifest: the scan's own view (only min/max
+            # consult the types)
             logical_types = {
                 f.name: f.dataType.simpleString()
                 for f in self._apply_mapping(
@@ -4737,7 +3988,7 @@ class CommitLogTableStore(TableStore):
                 ).schema.fields
             }
         phys_of = {
-            col: self._to_physical(man, col)
+            col: self._to_physical(top, col)
             for _fn, col in specs
             if col != "*"
         }
@@ -4747,144 +3998,79 @@ class CommitLogTableStore(TableStore):
             if logical_types.get(col) in self._EXACT_STAT_TYPES
         }
         minmax_only = all(fn in ("min", "max") for fn, _c in specs)
-
-        def _meta_answer(f: dict) -> "dict | None":
-            return _agg_meta_answer(f, specs, phys_of, exact_minmax)
-
-        meta_files = total = 0
-        cand: dict[str, object] = {}
-        counts: dict[str, int] = {}
-        sums: dict[str, int] = {}
-
-        def _fold_meta(contrib: dict) -> None:
-            for (fn, col) in specs:
-                a = _alias(fn, col)
-                if a not in contrib:
-                    continue
-                if fn == "count":
-                    counts[a] = counts.get(a, 0) + contrib[a]
-                elif fn == "sum":
-                    sums[a] = sums.get(a, 0) + contrib[a]
-                elif fn == "min":
-                    cand[a] = (
-                        contrib[a]
-                        if a not in cand
-                        else min(cand[a], contrib[a])
-                    )
-                else:
-                    cand[a] = (
-                        contrib[a]
-                        if a not in cand
-                        else max(cand[a], contrib[a])
-                    )
-
-        scan_entries: list[dict] = []
-        exact_total = True
-        for e in man.get("entries") or []:
-            live = e.get("buckets")
-            files = e.get("files")
-            if files is None:
-                scan_entries.append(e)
-                exact_total = False
-                continue
-            keep: list[dict] = []
-            for f in files:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
-                    continue
-                total += 1
-                if not file_may_match_dnf(f, preds_phys):
-                    continue
-                contrib = (
-                    _meta_answer(f)
-                    if file_must_match_dnf(f, preds_phys)
-                    else None
-                )
-                if contrib is not None:
-                    _fold_meta(contrib)
-                    meta_files += 1
-                else:
-                    keep.append(f)
-            if keep:
-                scan_entries.append({**e, "files": keep})
-        if minmax_only and scan_entries:
+        op = livefold.AggOp(
+            self._physical_dnf(top, preds),
+            specs,
+            phys_of,
+            exact_minmax,
+            meta_ok=not top.get("delete_vectors"),
+            cap=self.COUNT_SCAN_FALLBACK_MAX,
+            keep_stats=minmax_only,
+        )
+        acc = self._fold_live(op, man, entries_df)
+        exact = all(fs is not None for _b, fs in acc["scan"].values())
+        if acc["n_scan"] > self.COUNT_SCAN_FALLBACK_MAX:
+            # Unselective predicate: the boundary path list would be
+            # the driver bottleneck — one pruned scan IS the plan (it
+            # re-reads the metadata tier, so it alone is the answer).
+            row = self.read_where(table_name, preds, version=version).agg(
+                *_agg_exprs()
+            ).collect()[0]
+            return {
+                "aggs": {_alias(f, c): row[_alias(f, c)] for f, c in specs},
+                "files_total": acc["total"] if exact else None,
+                "files_metadata": 0,
+                "files_scanned": acc["n_scan"] if exact else None,
+            }
+        cand, scan = acc["aggs"], acc["scan"]
+        if minmax_only:
             # Dominance pruning: a boundary file whose zone maps prove
             # it cannot beat any metadata candidate is never read
             # (stats.min is a lower bound even when truncated, so
             # stats.min >= cand proves "cannot lower the min"; dually
             # for max with the bumped upper bound).
-            pruned_entries: list[dict] = []
-            for e in scan_entries:
-                if e.get("files") is None:
-                    pruned_entries.append(e)
-                    continue
-                keep = []
-                for f in e["files"]:
-                    stats = f.get("stats") or {}
-                    dominated = True
-                    for fn, col in specs:
-                        a = _alias(fn, col)
-                        cs = stats.get(phys_of[col])
-                        v = (cs or {}).get(
-                            "min" if fn == "min" else "max"
-                        )
-                        if a not in cand or cs is None or v is None:
-                            dominated = False
-                            break
-                        if (fn == "min" and v < cand[a]) or (
-                            fn == "max" and v > cand[a]
-                        ):
-                            dominated = False
-                            break
-                    if not dominated:
-                        keep.append(f)
-                if keep:
-                    pruned_entries.append({**e, "files": keep})
-            scan_entries = pruned_entries
-        n_scan = sum(
-            len(e["files"]) if e.get("files") is not None else 0
-            for e in scan_entries
-        )
+            def _competes(f: dict) -> bool:
+                stats = f.get("stats") or {}
+                for fn, col in specs:
+                    a = _alias(fn, col)
+                    v = (stats.get(phys_of[col]) or {}).get(fn)
+                    if a not in cand or v is None:
+                        return True
+                    if (fn == "min" and v < cand[a]) or (
+                        fn == "max" and v > cand[a]
+                    ):
+                        return True
+                return False
+
+            scan = {
+                p: [b, fs and [f for f in fs if _competes(f)]]
+                for p, (b, fs) in scan.items()
+            }
+            scan = {p: v for p, v in scan.items() if v[1] != []}
+        n_scan = sum(len(fs or ()) for _b, fs in scan.values())
         scanned: dict = {}
-        if scan_entries:
-            df = self._apply_mapping(
-                self._entries_df(table_name, scan_entries, dv_man=man), man
-            )
-            residual = dnf_to_column(preds)
-            if residual is not None:
-                df = df.filter(residual)
-            row = df.agg(*_agg_exprs()).collect()[0]
-            scanned = {a: row[a] for a in row.asDict()}
+        df = self._boundary_df(table_name, top, man, entries_df, scan, preds)
+        if df is not None:
+            scanned = df.agg(*_agg_exprs()).collect()[0].asDict()
         out_aggs: dict = {}
         for fn, col in specs:
             a = _alias(fn, col)
             if fn == "count":
-                out_aggs[a] = counts.get(a, 0) + (scanned.get(a) or 0)
-            elif fn in ("sum", "avg"):
-                # metadata tier holds only for columns with harvested
-                # per-file sums (harvest_sums / build_sum_stats);
-                # everything else lands in the scan tier. SQL SUM over
-                # an empty match set is NULL, never 0.
-                vals = [
-                    v for v in (sums.get(a), scanned.get(a)) if v is not None
-                ]
-                out_aggs[a] = sum(vals) if vals else None
+                out_aggs[a] = cand.get(a, 0) + (scanned.get(a) or 0)
+                continue
+            # SQL SUM/MIN/MAX over an empty match set is NULL, never 0
+            vals = [v for v in (cand.get(a), scanned.get(a)) if v is not None]
+            if not vals:
+                out_aggs[a] = None
+            elif fn == "sum":
+                out_aggs[a] = sum(vals)
             else:
-                vals = [
-                    v for v in (cand.get(a), scanned.get(a)) if v is not None
-                ]
-                if not vals:
-                    out_aggs[a] = None
-                else:
-                    out_aggs[a] = min(vals) if fn == "min" else max(vals)
+                out_aggs[a] = min(vals) if fn == "min" else max(vals)
         return {
             "aggs": out_aggs,
-            "files_total": total if exact_total else None,
-            "files_metadata": meta_files,
-            "files_scanned": n_scan if exact_total else None,
+            "files_total": acc["total"] if exact else None,
+            "files_metadata": acc["meta"],
+            "files_scanned": n_scan if exact else None,
         }
 
     def history(self, table_name: str) -> list[dict]:
@@ -4965,199 +4151,31 @@ class CommitLogTableStore(TableStore):
         its log the same way). Returns None fields when any live file
         predates the stats layer (then only a scan knows).
 
-        Above :attr:`DISTRIBUTED_MANIFEST_MIN_BYTES` the aggregation
-        runs as one small Spark job over the checkpoint sidecar (the
-        manifest is never materialized on the driver); below it, pure
-        driver arithmetic as before."""
+        One :class:`~pyairbyte_spark.livefold.StatsOp` fold: driver
+        arithmetic for cached manifests; above
+        :attr:`DISTRIBUTED_MANIFEST_MIN_BYTES`, one small Spark job
+        over the checkpoint sidecar whose per-partition partials merge
+        on the driver (the manifest is never materialized there)."""
         top, entries_df, man = self._scan_source(table_name, version)
-        if entries_df is not None:
-            return self._table_stats_distributed(top, entries_df)
-        exact = all(
-            e.get("files") is not None for e in man.get("entries") or []
-        )
-        n_files = 0
-        rows = 0
-        size = 0
-        col_stats: dict[str, dict] = {}
-        dead_cols: set[str] = set()
-        for e in man.get("entries") or []:
-            live = e.get("buckets")
-            for f in e.get("files") or []:
-                if (
-                    live is not None
-                    and f.get("bucket") is not None
-                    and f["bucket"] not in live
-                ):
-                    continue
-                n_files += 1
-                rows += f.get("rows") or 0
-                size += f.get("bytes") or 0
-                fstats = f.get("stats") or {}
-                for c, s in fstats.items():
-                    if c == BUCKET_COL or c in dead_cols:
-                        continue
-                    cur = col_stats.get(c)
-                    if cur is None:
-                        # "files" counts live files CARRYING this
-                        # column's stats: min/max are proofs over the
-                        # whole table only when files == table files
-                        # (a stat-less legacy file could hold anything)
-                        col_stats[c] = {**s, "files": 1}
-                        continue
-                    cur["files"] = cur.get("files", 1) + 1
-                    try:
-                        cur["min"] = min(cur["min"], s["min"])
-                    except TypeError:
-                        dead_cols.add(c)
-                        col_stats.pop(c, None)
-                        continue
-                    if cur.get("max") is None or s.get("max") is None:
-                        cur["max"] = None
-                    else:
-                        cur["max"] = max(cur["max"], s["max"])
-                    if cur.get("nulls") is None or s.get("nulls") is None:
-                        cur["nulls"] = None
-                    else:
-                        cur["nulls"] += s["nulls"]
-        mapping, dropped = self._mapping_of(man)
+        acc = self._fold_live(livefold.StatsOp(), man, entries_df)
+        exact = acc["exact"]
+        mapping, dropped = self._mapping_of(top)
         col_stats = {
             mapping.get(c, c): s
-            for c, s in col_stats.items()
-            if c not in dropped
+            for c, s in acc["columns"].items()
+            if c not in dropped and c != BUCKET_COL
         }
         # Merge-on-read deletes: file footers still count the deleted
         # rows; the manifest's DV records carry the exact correction.
         # (Per-column min/max/nulls stay upper bounds — same contract
         # as Iceberg's stats over position deletes.)
-        rows -= sum(
-            d.get("rows") or 0 for d in man.get("delete_vectors") or []
-        )
-        return {
-            "rows": rows if exact else None,
-            "files": n_files if exact else None,
-            "bytes": size if exact else None,
-            "columns": col_stats if exact else {},
-            "version": man.get("version"),
-        }
-
-    def _table_stats_distributed(self, top: dict, entries_df: DataFrame) -> dict:
-        """:meth:`table_stats` over the sidecar frame: counts/sums as
-        one JVM aggregation; per-column min/max as per-partition
-        partials (``mapInPandas`` emitting ≤ 32 rows per partition)
-        merged on the driver — bounded output at any file count."""
-        import pandas as pd
-
-        is_file = F.col("file_path").isNotNull()
-        is_live = is_file & (
-            F.col("entry_buckets").isNull()
-            | F.col("bucket").isNull()
-            | F.expr("array_contains(entry_buckets, bucket)")
-        )
-        agg = entries_df.agg(
-            F.sum(is_live.cast("long")).alias("files"),
-            F.sum(F.when(is_live, F.col("rows"))).alias("rows"),
-            F.sum(is_live.cast("long") * F.col("rows").isNull().cast("long")).alias(
-                "norows"
-            ),
-            F.sum(F.when(is_live, F.col("bytes"))).alias("bytes"),
-            F.sum(
-                ((~is_file) & (~F.col("has_files"))).cast("long")
-            ).alias("prestat"),
-        ).collect()[0]
-        exact = not (agg["prestat"] or 0) and not (agg["norows"] or 0)
-        col_stats: dict[str, dict] = {}
-        dead_cols: set[str] = set()
-        if exact:
-            live = entries_df.filter(is_live).select("stats")
-
-            def _partials(batches):
-                acc: dict[str, dict] = {}
-                dead: set[str] = set()
-                for pdf in batches:
-                    for s in pdf["stats"]:
-                        if s is None:
-                            continue
-                        for c, st in json.loads(s).items():
-                            if c in dead:
-                                continue
-                            cur = acc.get(c)
-                            if cur is None:
-                                # "files" mirrors the driver loop: live
-                                # files CARRYING this column's stats
-                                acc[c] = {**st, "files": 1}
-                                continue
-                            cur["files"] = cur.get("files", 1) + 1
-                            try:
-                                cur["min"] = min(cur["min"], st["min"])
-                            except TypeError:
-                                dead.add(c)
-                                acc.pop(c, None)
-                                continue
-                            if cur.get("max") is None or st.get("max") is None:
-                                cur["max"] = None
-                            else:
-                                cur["max"] = max(cur["max"], st["max"])
-                            if (
-                                cur.get("nulls") is None
-                                or st.get("nulls") is None
-                            ):
-                                cur["nulls"] = None
-                            else:
-                                cur["nulls"] += st["nulls"]
-                yield pd.DataFrame(
-                    {
-                        "col": list(acc) + sorted(dead),
-                        "stat": [json.dumps(acc[c]) for c in acc]
-                        + [None] * len(dead),
-                    }
-                )
-
-            partials = live.mapInPandas(
-                _partials, schema="col string, stat string"
-            ).collect()
-            for r in partials:
-                c = r["col"]
-                if r["stat"] is None:
-                    dead_cols.add(c)
-                    col_stats.pop(c, None)
-                    continue
-                if c in dead_cols:
-                    continue
-                st = json.loads(r["stat"])
-                cur = col_stats.get(c)
-                if cur is None:
-                    col_stats[c] = st
-                    continue
-                cur["files"] = (cur.get("files") or 0) + (
-                    st.get("files") or 0
-                )
-                try:
-                    cur["min"] = min(cur["min"], st["min"])
-                except TypeError:
-                    dead_cols.add(c)
-                    col_stats.pop(c, None)
-                    continue
-                if cur.get("max") is None or st.get("max") is None:
-                    cur["max"] = None
-                else:
-                    cur["max"] = max(cur["max"], st["max"])
-                if cur.get("nulls") is None or st.get("nulls") is None:
-                    cur["nulls"] = None
-                else:
-                    cur["nulls"] += st["nulls"]
-        mapping, dropped = self._mapping_of(top)
-        col_stats = {
-            mapping.get(c, c): s
-            for c, s in col_stats.items()
-            if c not in dropped and c != BUCKET_COL
-        }
-        dv_rows = sum(
+        rows = acc["rows"] - sum(
             d.get("rows") or 0 for d in top.get("delete_vectors") or []
         )
         return {
-            "rows": int(agg["rows"] or 0) - dv_rows if exact else None,
-            "files": int(agg["files"] or 0) if exact else None,
-            "bytes": int(agg["bytes"] or 0) if exact else None,
+            "rows": rows if exact else None,
+            "files": acc["files"] if exact else None,
+            "bytes": acc["bytes"] if exact else None,
             "columns": col_stats if exact else {},
             "version": top.get("version"),
         }

@@ -1,13 +1,17 @@
 """Distributed manifest scans: when the checkpoint sidecar is large,
-plan_scan / read_where / table_stats resolve entries with Spark instead
-of materializing the entry list in driver Python.
+plan_scan / read_where / count_where / agg_where / table_stats run the
+store's live-file fold (``livefold.py``) on the executors, one
+``mapInArrow`` pass over the sidecar frame with one partial per
+partition merged on the driver, instead of materializing the entry
+list in driver Python.
 
 Equivalence is the contract: with DISTRIBUTED_MANIFEST_MIN_BYTES
-forced to 0 (everything takes the distributed path) every observable —
+forced to 0 (everything takes the sidecar venue) every observable —
 pruned file sets, skip counts, read results, stats — must match the
-exhaustively-tested driver path byte for byte. The 10k→1M flat-RSS
-evidence lives in scripts/stress_manifests.py; these tests pin
-semantics at test scale.
+driver venue, which runs the same fold over the cached manifest. The
+10k→1M flat driver-memory evidence lives in
+scripts/stress_distributed_scan.py; these tests pin semantics at test
+scale.
 """
 
 from __future__ import annotations
@@ -177,3 +181,50 @@ def test_survivor_collapse_equivalence(spark, stores):
     # a predicate pruning whole entries AND splitting one: mixed plan
     got = _rows(dist.read_where("t", [("id", "in", (2, 12, 31))]))
     assert got == [(2, "v2"), (12, "v12"), (31, "v31")]
+
+
+def test_partials_merge_across_partitions(spark, tmp_path, monkeypatch):
+    """A sidecar plus delta commits gives a multi-partition entries
+    frame, so every op's per-partition partials really merge on the
+    driver: plan_scan, count_where, table_stats and agg_where (counts,
+    min/max, harvested sums, avg) must equal the driver venue."""
+    monkeypatch.setattr(mf, "PARQUET_CHECKPOINT_MIN_ENTRIES", 1)
+    drv = CommitLogTableStore(
+        spark, str(tmp_path / "wh"), "main", harvest_sums=True
+    )
+    for i in range(4):  # v1 full (the sidecar), v2..v4 delta commits
+        rows = [(i * 10 + j, None if j == 2 else f"v{j}") for j in range(8)]
+        drv.write_append(_df(spark, rows, f"p{i}").coalesce(2), "t")
+    dist = CommitLogTableStore(
+        spark, str(tmp_path / "wh"), "main", harvest_sums=True
+    )
+    dist.DISTRIBUTED_MANIFEST_MIN_BYTES = 0
+    assert mf.is_delta(dist._read_commit_json("t", 4))
+    _top, entries_df, man = dist._scan_source("t", None)
+    assert man is None and entries_df.rdd.getNumPartitions() >= 2
+    # the sidecar venue must never materialize the entry list
+    monkeypatch.setattr(
+        dist,
+        "_read_manifest",
+        lambda *a, **k: (_ for _ in ()).throw(
+            AssertionError("sidecar venue materialized the manifest")
+        ),
+    )
+    aggs = [
+        ("count", "*"), ("count", "v"), ("min", "id"), ("max", "id"),
+        ("sum", "id"), ("avg", "id"),
+    ]
+    for preds in ([("id", "<", 12)], [[("id", "<", 3)], [("id", ">=", 25)]]):
+        p_dist, p_drv = dist.plan_scan("t", preds), drv.plan_scan("t", preds)
+        assert p_dist.get("distributed") is True
+        assert _plan_key(p_dist) == _plan_key(p_drv), preds
+        assert dist.count_where("t", preds) == drv.count_where("t", preds)
+        assert dist.agg_where("t", aggs, preds) == drv.agg_where(
+            "t", aggs, preds
+        ), preds
+    # min/max only: the dominance-pruned tail
+    mm, preds = [("min", "id"), ("max", "id")], [("id", ">=", 5)]
+    assert dist.agg_where("t", mm, preds) == drv.agg_where("t", mm, preds)
+    s_dist = dist.table_stats("t")
+    assert s_dist == drv.table_stats("t")
+    assert s_dist["rows"] == 32 and s_dist["columns"]["id"]["max"] == 37
